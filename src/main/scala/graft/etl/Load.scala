@@ -1,9 +1,14 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftShim, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, FloatType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, StructType}
+import graft.plans.SnapshotFileIndex
 
 /** S4/S5/S6/S8: sink layer. The reference upserts row-dict JSON over
   * HTTP from driver memory (`main.py:27-59`) — its scalability
@@ -57,45 +62,55 @@ object Load {
     * at 100 TB an incremental batch touching 3 of 64 buckets reads
     * ~5% of the table instead of all of it. Untouched partitions'
     * files are never opened (asserted byte-identical in LoadSpec).
+    *
+    * One plan serves the first batch and every later one (the first
+    * simply has no current side), and its fixed cost follows the
+    * batch, not the bucket count:
+    *  - one shuffle: (touched current rows ∪ batch), read by at
+    *    most defaultParallelism map tasks, is hash-partitioned on
+    *    `__bucket` into min(touched buckets, defaultParallelism)
+    *    partitions, and the latest-wins window runs over
+    *    (`__bucket`, keys) so it reuses that partitioning instead of
+    *    adding a second exchange;
+    *  - bounded writers: at most defaultParallelism write tasks,
+    *    each owning whole buckets — so every batch writes exactly one
+    *    file per touched bucket, the floor for a rewrite-the-bucket
+    *    table (one task per bucket would pay each task's fixed
+    *    deserialize-and-commit cost 64 times over);
+    *  - a listing-free read: the driver lists only the touched bucket
+    *    dirs that exist and scans that fixed file list, with the
+    *    schema from one footer — no Spark listing or schema job.
     */
   def upsert(spark: SparkSession, incoming: DataFrame, path: String,
              keys: Seq[String]): Unit = {
     recoverSwap(spark, path)
-    val inc = sinkReady(incoming)
-      .withColumn("__bucket", bucketOf(keys))
-      .withColumn("__v", lit(1L))
-    if (!tableExists(spark, path)) {
-      val w = Window.partitionBy(keys.map(col): _*).orderBy(col("__v").desc)
-      val first = inc.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__v", "__rn")
-      val tmp = path + "__tmp"
-      first.write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
-      swap(spark, tmp, path)
-      return
-    }
+    val inc = sinkReady(incoming).withColumn("__v", lit(1L))
     // touched buckets: a bounded driver-side collect (≤ UpsertBuckets
-    // ints), the partition-pruning predicate for the read below
-    val touched = inc.select("__bucket").distinct()
-      .collect().map(_.getLong(0)).sorted
+    // longs), which picks the current files to read below
+    val touched = inc.select(bucketOf(keys)).distinct()
+      .collect().map(_.getLong(0)).toSeq.sorted
     if (touched.isEmpty) return
-    // partition pruning: only the touched buckets' files are read
-    val cur = spark.read.parquet(path)
-      .filter(col("__bucket").isin(touched: _*))
-      .withColumn("__v", lit(0L))
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(col("__v").desc)
-    val merged = cur.unionByName(inc, allowMissingColumns = true)
+    val exists = tableExists(spark, path)
+    val both = (if (exists) readBuckets(spark, path, touched) else None)
+      .map(_.withColumn("__v", lit(0L)).unionByName(inc, allowMissingColumns = true))
+      .getOrElse(inc)
+    val cores = spark.sparkContext.defaultParallelism
+    val w = Window.partitionBy((col("__bucket") +: keys.map(col)): _*)
+      .orderBy(col("__v").desc)
+    val tmp = path + "__tmp"
+    // the bucket is derived after the coalesce (current rows re-hash
+    // to the bucket they were read from), which keeps the optimizer
+    // from folding the coalesce into the repartition: the shuffle's
+    // map side runs as at most `cores` tasks however many files and
+    // batch partitions feed it
+    both.coalesce(cores)
+      .withColumn("__bucket", bucketOf(keys))
+      .repartition(math.min(touched.length, cores), col("__bucket"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__v", "__rn")
-    // write merged buckets beside the table, then swap ONLY those
-    // partition directories — untouched buckets are never rewritten.
-    // repartition on the bucket first: otherwise every shuffle task
-    // writes a sliver into every touched bucket dir (tasks × buckets
-    // small files per batch — the classic 100 TB small-files trap);
-    // this way each bucket gets one writer and one file per batch.
-    val tmp = path + "__tmp"
-    merged.repartition(col("__bucket"))
       .write.mode("overwrite").partitionBy("__bucket").parquet(tmp)
+    if (!exists) { swap(spark, tmp, path); return }
     // Crash-safe swap: the old generation is MOVED ASIDE (a sibling
     // dir, invisible to partition discovery), never deleted before
     // every new bucket is in place — at no point does any step
@@ -129,6 +144,44 @@ object Load {
     // the only remaining copy of that bucket.)
     fs.delete(aside, true)
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
+  }
+
+  /** The current rows of the touched buckets that exist, or None when
+    * none exists yet. Listing is a driver-side `listStatus` of the
+    * table root and of each touched dir, and the scan runs over that
+    * fixed file list ([[graft.plans.SnapshotFileIndex]] without
+    * stats); data files are what Spark itself reads (names starting
+    * with `_` or `.` are metadata).
+    */
+  private def readBuckets(spark: SparkSession, path: String,
+                          touched: Seq[Long]): Option[DataFrame] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = fs.listStatus(root).iterator.filter(_.isDirectory)
+      .map(s => s.getPath.getName -> s.getPath).toMap
+    val files = touched.flatMap(b => dirs.get(s"__bucket=$b"))
+      .flatMap(fs.listStatus(_))
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+        !f.getPath.getName.startsWith("."))
+    files.headOption.map { f =>
+      GraftShim.ofRows(spark, GraftShim.parquetScanPlan(spark,
+        new SnapshotFileIndex(spark, fs.makeQualified(root), files, None),
+        footerSchema(spark, f)))
+    }
+  }
+
+  /** A file's Spark schema from its footer, read on the driver: Spark
+    * records the written schema in the file's key-value metadata.
+    * Falls back to Spark's own inference for a file without it.
+    */
+  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val json = try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY))
+      finally reader.close()
+    json.map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(spark.read.parquet(file.getPath.toString).schema)
   }
 
   private def asideDir(path: String): String = path + "__swap"

@@ -4606,8 +4606,10 @@ object Snapshots {
           case x => x
         }
         case dt: DecimalType => v match {
-          case bd: java.math.BigDecimal => bd.setScale(dt.scale)
-          case bd: scala.math.BigDecimal => bd.setScale(dt.scale).bigDecimal
+          case bd: java.math.BigDecimal =>
+            bd.setScale(dt.scale, java.math.RoundingMode.UNNECESSARY)
+          case bd: scala.math.BigDecimal =>
+            bd.bigDecimal.setScale(dt.scale, java.math.RoundingMode.UNNECESSARY)
           case x => x
         }
         case _ => v

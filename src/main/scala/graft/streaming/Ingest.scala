@@ -67,12 +67,27 @@ object Ingest {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val split = Transform.run(batch, dim)
-        factSink.upsert(split.clean, factKeys)
-        Load.appendQuarantineIdempotent(split.quarantine, quarantinePath, batchId)
+        loadBatch(batch, dim, factSink, quarantinePath, batchId)
       }
       .start()
     query.awaitTermination()
+  }
+
+  /** One micro-batch through transform → route → both sinks. The
+    * transformed batch is persisted, so the parse and transform run
+    * once however many actions the sinks take (the upsert's
+    * touched-bucket collect and write, the quarantine write); it is
+    * unpersisted when the batch is done, so no cached batch outlives
+    * its trigger.
+    */
+  private def loadBatch(raw: DataFrame, dim: DataFrame, factSink: UpsertSink,
+                        quarantinePath: String, batchId: Long): Unit = {
+    val fact = Transform.transform(raw, dim).persist()
+    try {
+      val split = Transform.route(fact)
+      factSink.upsert(split.clean, factKeys)
+      Load.appendQuarantineIdempotent(split.quarantine, quarantinePath, batchId)
+    } finally fact.unpersist()
   }
 
   /** Event time must be an INSTANT: a watermark on TIMESTAMP_NTZ is
@@ -139,9 +154,7 @@ object Ingest {
         val raw = graft.sources.Xlsx
           .sheetsOf(batch, sheetName, rawSchema, skipCorrupt = true)
           .drop("_src_file")
-        val split = Transform.run(raw, dim)
-        factSink.upsert(split.clean, factKeys)
-        Load.appendQuarantineIdempotent(split.quarantine, quarantinePath, batchId)
+        loadBatch(raw, dim, factSink, quarantinePath, batchId)
       }
       .start()
     query.awaitTermination()

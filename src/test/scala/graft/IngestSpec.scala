@@ -23,12 +23,18 @@ class IngestSpec extends SparkSpec {
     val staging = base + "/staging"; val archive = base + "/archive"
     val checkpoint = base + "/chk"; val fact = base + "/fact"; val q = base + "/quar"
     Files.createDirectories(Paths.get(staging))
+    // each micro-batch persists its transformed rows once for both
+    // sinks and must drop them before the pass returns
+    def cached(): Boolean = !spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+    spark.catalog.clearCache()
 
     writeCsv(staging, "day1.csv", Seq(
       """1,Spanish Latte (Solo) (Hot) x2,100.00,100.00,t1,100.00,-,Dine-in""",
       """2,Biscoff Croffle x1,50.00,50.00,t2,0.00,-,Take-out"""))
     Ingest.ingestAvailableNow(spark, staging, archive, checkpoint, fact, q,
       Transform.dimDF(spark))
+    assert(!cached())
     assert(spark.read.parquet(fact).count() === 2)
 
     // second pass with a new file: old file not reprocessed, new one is
@@ -36,6 +42,7 @@ class IngestSpec extends SparkSpec {
       """3,Americano (Duo) (Cold) x1,70.00,70.00,t3,-,70.00,Delivery"""))
     Ingest.ingestAvailableNow(spark, staging, archive, checkpoint, fact, q,
       Transform.dimDF(spark))
+    assert(!cached())
     val got = spark.read.parquet(fact).orderBy("order_id")
       .select("order_id", "items").as[(String, String)].collect().toSeq
     assert(got === Seq(("1", "Spanish Latte"), ("2", "Croffle - Biscoff"),

@@ -71,6 +71,89 @@ class LoadSpec extends SparkSpec {
       .as[Double].head() === 9.0)
   }
 
+  test("upsert: one file per bucket, one shuffle, no job wider than the cores") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val path = tmpDir("onefile") + "/t"
+    val keys = Seq("order_id", "items")
+    def filesPerBucket(): Map[String, Int] =
+      Files.list(Paths.get(path)).iterator().asScala.toSeq
+        .filter(_.getFileName.toString.startsWith("__bucket="))
+        .map(d => d.getFileName.toString -> Files.list(d).iterator().asScala
+          .count(_.getFileName.toString.endsWith(".parquet")))
+        .toMap
+    // create path: spread over more input partitions than there are
+    // cores, so any bucket split across tasks would show as 2+ files;
+    // with AQE's partition coalescing off, the plan itself — not a
+    // tiny input's coalesced shuffle — must keep each bucket whole
+    val v1 = (1 to 600).map(i => (s"o$i", s"i$i", 1.0))
+      .toDF("order_id", "items", "amount").repartition(8)
+    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(coalesceKey, "false")
+    try Load.upsert(spark, v1, path, keys)
+    finally spark.conf.unset(coalesceKey)
+    assert(filesPerBucket().size === Load.UpsertBuckets)
+    assert(filesPerBucket().values.toSet === Set(1))
+
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+      case q: QueryStageExec => flatten(q.plan)
+      case _ => p.children.flatMap(flatten)
+    })
+    val tasksOfStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val jobStages = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val jobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobStages.put(e.jobId, e.stageIds)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        tasksOfStage.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+    }
+    val qes = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (flatten(qe.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec]))
+          writes.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(jobs)
+    spark.listenerManager.register(qes)
+    // updates 100 existing keys, inserts 100 new ones; one input
+    // partition, as one workbook's micro-batch arrives (the
+    // touched-bucket collect runs on the batch's own partitions)
+    val v2 = (501 to 700).map(i => (s"o$i", s"i$i", 2.0))
+      .toDF("order_id", "items", "amount").coalesce(1)
+    try {
+      Load.upsert(spark, v2, path, keys)
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally {
+      spark.sparkContext.removeSparkListener(jobs)
+      spark.listenerManager.unregister(qes)
+    }
+    assert(filesPerBucket().values.toSet === Set(1))
+    val t = Load.readTable(spark, path)
+    assert(t.count() === 700)
+    assert(t.filter(col("amount") === 2.0).count() === 200)
+
+    // the merge write: exactly one shuffle (the bucket repartition the
+    // window reuses), broadcast exchanges aside
+    assert(writes.size === 1)
+    val shuffles = flatten(writes.peek().executedPlan)
+      .collect { case x: ShuffleExchangeLike => x }
+    assert(shuffles.size === 1, writes.peek().executedPlan.treeString)
+    // no listing job, no writer per bucket: every job fits in the cores
+    val jobTasks = jobStages.asScala.values.map(_.map(s =>
+      tasksOfStage.getOrDefault(s, 0)).sum)
+    assert(jobTasks.nonEmpty)
+    assert(jobTasks.max <= spark.sparkContext.defaultParallelism,
+      s"job task counts: ${jobTasks.toSeq.sorted}")
+  }
+
   test("upsert swap: crash before rename-in loses nothing; replay converges") {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val path = tmpDir("crash1") + "/t"

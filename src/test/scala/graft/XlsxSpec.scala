@@ -396,7 +396,13 @@ class XlsxSpec extends SparkSpec {
       base + "/archive", base + "/ckpt",
       new ParquetUpsertSink(spark, factPath), base + "/quar",
       Transform.dimDF(spark))
+    // each micro-batch persists its transformed rows once for both
+    // sinks and must drop them before the pass returns
+    def cached(): Boolean = !spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+    spark.catalog.clearCache()
     run()
+    assert(!cached())
     val items = graft.etl.Load.readTable(spark, factPath)
       .select("items").orderBy("items").collect().map(_.getString(0)).toSeq
     assert(items === Seq("Croffle - Biscoff", "Spanish Latte"))
@@ -404,6 +410,7 @@ class XlsxSpec extends SparkSpec {
     // only its rows (checkpoint skips the consumed ones)
     put("day3.xlsx", contractSheet(3, "Americano (Duo) (Hot)", "120"))
     run()
+    assert(!cached())
     val after = graft.etl.Load.readTable(spark, factPath)
       .select("items").orderBy("items").collect().map(_.getString(0)).toSeq
     assert(after === Seq("Americano", "Croffle - Biscoff", "Spanish Latte"))
